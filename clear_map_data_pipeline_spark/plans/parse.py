@@ -13,11 +13,10 @@ encodes at the sink edge.
 Scale shape: ONE pinned computation of the clean->reconcile->rebase->
 join->stats prefix serves all four windows (SURVEY §4 X3); per window,
 the polygon file is the export frame itself, the lines file a
-3-column projection + ST_Boundary (S5), and the dates-CSV columns are
-three tiny aggregates (distinct dates, 19-quantile vector of
-``normalized``, daily delta sums).  Artifacts are feature-count-small
-(the reference writes single files); ``write_geojson`` keeps a
-``distributed=True`` path for at-scale exports.
+3-column projection + ST_Boundary (S5), and the dates-CSV columns come
+from two tiny aggregates (19-quantile vector of ``normalized``; daily
+delta sums, whose date keys are the window's distinct dates).
+Artifacts are feature-count-small (the reference writes single files).
 """
 
 from __future__ import annotations
@@ -46,13 +45,9 @@ def _lines_frame(export: DataFrame) -> DataFrame:
 def _dates_columns(export: DataFrame, window: str) -> dict[str, list]:
     """The three per-window lists of the dates CSV (ref :77,:167-169):
     unique sorted dates, the 19-quantile color scale over
-    ``normalized``, and the first-differenced daily sums."""
-    dates = [
-        r["date"].isoformat()
-        for r in stats.distinct_ordered_dates(export.select("date"))
-        .orderBy("date")
-        .collect()
-    ]
+    ``normalized``, and the first-differenced daily sums.  The daily
+    sums carry one row per distinct date, so their date keys are the
+    dates list."""
     colors = [
         r["q_value"]
         for r in stats.quantile_vector(
@@ -61,18 +56,17 @@ def _dates_columns(export: DataFrame, window: str) -> dict[str, list]:
         .orderBy("q_idx")
         .collect()
     ]
-    sums = [
-        r["daily_delta"]
-        for r in stats.daily_total_delta(
+    deltas = (
+        stats.daily_total_delta(
             export.select("date", F.col("num_cases").alias("cases")), "cases"
         )
         .orderBy("date")
         .collect()
-    ]
+    )
     return {
-        f"{window}_dates": dates,
+        f"{window}_dates": [r["date"].isoformat() for r in deltas],
         f"{window}_colors": colors,
-        f"{window}_sums": sums,
+        f"{window}_sums": [r["daily_delta"] for r in deltas],
     }
 
 

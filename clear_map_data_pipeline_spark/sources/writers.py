@@ -3,8 +3,6 @@
 The reference's export artifacts are small (thousands of features), so
 the GeoJSON/CSV writers collect ordered rows to the driver and emit a
 single file — matching the reference's single-file, ordered outputs.
-The interface stays partitioned-capable: pass ``distributed=True`` to
-write a parquet/json dataset instead for at-scale exports.
 
 S7 (tippecanoe), S8 (S3 upload) and S9 (Mapbox publish) are process/
 network boundaries OUTSIDE the query plan — kept as driver-side adapter
@@ -26,18 +24,12 @@ def write_geojson(
     path: str,
     geom_col: str = "geometry",
     order_by: Sequence[str] = ("id", "date"),
-    distributed: bool = False,
 ) -> None:
     """S4/S5 (ref :173-175): write features as a GeoJSON
     FeatureCollection (geometry from the WKT column, all other columns
     as properties)."""
     from ..operators.spatial import wkt_to_geojson
 
-    if distributed:
-        (
-            df.write.mode("overwrite").json(path)
-        )
-        return
     cols = [c for c in df.columns if c != geom_col]
     rows = df.orderBy(*order_by).collect()
     feats = []

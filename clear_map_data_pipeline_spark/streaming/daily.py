@@ -28,7 +28,6 @@ def daily_totals_stream(
     query_name: str = "daily_totals",
     watermark: str = "1 day",
     max_files_per_trigger: int | None = None,
-    store_provider: str | None = None,
 ) -> DataFrame:
     """Run the incremental daily-totals aggregation over the events
     parquet directory with AvailableNow, blocking until the backlog is
@@ -54,12 +53,9 @@ def daily_totals_stream(
             F.round("sum_value", 2).alias("sum_value"),
         )
     )
-    from .drain import backlog_state_width, drain_to_memory
+    from .drain import drain_to_memory
 
-    return drain_to_memory(
-        agg, spark, query_name, store_provider=store_provider,
-        pin_state_partitions=backlog_state_width(spark, events_dir),
-    )
+    return drain_to_memory(agg, spark, query_name, events_dir)
 
 
 def sliding_totals_stream(
@@ -70,7 +66,6 @@ def sliding_totals_stream(
     query_name: str = "sliding_totals",
     watermark: str = "1 day",
     max_files_per_trigger: int | None = None,
-    store_provider: str | None = None,
 ) -> DataFrame:
     """Sliding-window totals (r06) — the overlapping-window mode the
     tumbling daily aggregate can't express: every event lands in
@@ -84,7 +79,7 @@ def sliding_totals_stream(
     windows/slide times the tumbling op's state, still bounded by the
     watermark horizon, and per-key updates stay O(overlap) per event.
     """
-    from .drain import drain_to_memory, stage_stream_source
+    from .drain import stage_stream_source
 
     stream = normalize_ts(
         stage_stream_source(spark, events_dir, max_files_per_trigger)
@@ -102,9 +97,6 @@ def sliding_totals_stream(
             F.round("sum_value", 2).alias("sum_value"),
         )
     )
-    from .drain import backlog_state_width, drain_to_memory
+    from .drain import drain_to_memory
 
-    return drain_to_memory(
-        agg, spark, query_name, store_provider=store_provider,
-        pin_state_partitions=backlog_state_width(spark, events_dir),
-    )
+    return drain_to_memory(agg, spark, query_name, events_dir)

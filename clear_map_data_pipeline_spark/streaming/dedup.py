@@ -16,7 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import normalize_parquet_confs, normalize_ts
+from ..session import normalize_ts
 
 
 def stage_backlog(events_file: str, copies: int = 1) -> str:
@@ -40,19 +40,15 @@ def deduped_ingest_stream(
     watermark: str = "1 day",
     query_name: str = "deduped_ingest",
     max_files_per_trigger: int | None = None,
-    store_provider: str | None = None,
 ) -> DataFrame:
     """Drain the (possibly duplicated) backlog with exactly-once
     semantics on ``key``; returns the deduplicated per-type totals."""
-    normalize_parquet_confs(spark)
-    if os.path.isfile(events_dir):
-        events_dir = stage_backlog(events_dir, copies=1)
-    batch_schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(batch_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    from .drain import drain_to_memory, stage_stream_source
+
     stream = (
-        normalize_ts(reader.parquet(events_dir))
+        normalize_ts(
+            stage_stream_source(spark, events_dir, max_files_per_trigger)
+        )
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark([key])
     )
@@ -65,13 +61,4 @@ def deduped_ingest_stream(
         "n_events",
         "sum_value",
     )
-    from .drain import backlog_state_width, drain_to_memory
-
-    return drain_to_memory(
-        out,
-        spark,
-        query_name,
-        ckpt_prefix="clearmap_dedup_ckpt_",
-        store_provider=store_provider,
-        pin_state_partitions=backlog_state_width(spark, events_dir),
-    )
+    return drain_to_memory(out, spark, query_name, events_dir)

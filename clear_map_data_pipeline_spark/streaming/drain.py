@@ -1,8 +1,21 @@
-"""Shared streaming harness: source staging + the AvailableNow
-memory-sink drain — extracted from the eight per-operator copies so the
-drain discipline (symlink staging for single-file sources, fresh
-checkpoint per call, state-store partition pinning, blocking drain)
-lives in ONE place.
+"""Shared streaming harness: source staging and the ONE place an
+AvailableNow query is started.
+
+Every streaming op in the package (the eight memory-sink ops, the
+``foreachBatch`` export and the ``foreachBatch`` merge sink) reads its
+source through ``stage_stream_source`` and hands its query to
+``run_available_now``, which:
+
+- makes a tracked, fresh checkpoint and removes it after success (a
+  failed run keeps it for post-mortem until the exit sweep);
+- sizes the state width with ``backlog_state_width`` from the source
+  path it is given — Spark freezes that width into the checkpoint at
+  first start — and restores the session's setting after;
+- starts the query with ``Trigger.AvailableNow`` and blocks until the
+  backlog is drained.
+
+Every call therefore drains the whole backlog into a fresh checkpoint;
+restarting from an existing one (the daily re-run) is ROADMAP 4(a).
 """
 
 from __future__ import annotations
@@ -11,6 +24,7 @@ import atexit
 import os
 import shutil
 import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -128,54 +142,49 @@ def backlog_state_width(spark: SparkSession, events_dir: str) -> int:
     )
 
 
+def run_available_now(
+    df: DataFrame,
+    spark: SparkSession,
+    source: str,
+    query_name: str,
+    output_mode: str = "append",
+    foreach_batch: Callable[[DataFrame, int], None] | None = None,
+) -> None:
+    """Drain the streaming DataFrame ``df`` read from ``source`` with
+    AvailableNow, blocking until the backlog is consumed.  The sink is
+    ``foreach_batch`` when given, else a memory-sink table named
+    ``query_name``."""
+    width = backlog_state_width(spark, source)
+    checkpoint = _tracked_mkdtemp("clearmap_stream_ckpt_")
+    writer = (
+        df.writeStream.outputMode(output_mode)
+        .queryName(query_name)
+        .option("checkpointLocation", os.path.join(checkpoint, "cp"))
+        .trigger(availableNow=True)
+    )
+    if foreach_batch is None:
+        writer = writer.format("memory")
+    else:
+        writer = writer.foreachBatch(foreach_batch)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", width)
+    try:
+        writer.start().awaitTermination()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    # the backlog is drained and the sink holds its output — the
+    # checkpoint has no further reader
+    _TMP_DIRS.discard(checkpoint)
+    shutil.rmtree(checkpoint, ignore_errors=True)
+
+
 def drain_to_memory(
     df: DataFrame,
     spark: SparkSession,
     query_name: str,
+    source: str,
     output_mode: str = "append",
-    ckpt_prefix: str = "clearmap_stream_ckpt_",
-    pin_state_partitions: bool | int = False,
-    store_provider: str | None = None,
 ) -> DataFrame:
-    """Drain a streaming DataFrame with AvailableNow into a memory-sink
-    table and return it, blocking until the backlog is consumed.  A
-    fresh checkpoint per call keeps repeated invocations independent.
-
-    ``pin_state_partitions``: the state-store partition count is frozen
-    into the checkpoint at first start (safe to pin because the
-    checkpoint is fresh; the caller's setting is restored after).
-    ``True`` pins to the session's core count; an ``int`` pins to that
-    exact width — pass ``backlog_state_width(...)`` to size state to
-    the staged volume.
-
-    ``store_provider``: state-store provider class for this drain
-    (e.g. ``ROCKSDB_PROVIDER``); None keeps the session default."""
-    checkpoint = _tracked_mkdtemp(ckpt_prefix)
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    if pin_state_partitions:
-        width = (
-            spark.sparkContext.defaultParallelism
-            if pin_state_partitions is True
-            else int(pin_state_partitions)
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", width)
-    try:
-        with state_store_provider(spark, store_provider):
-            q = (
-                df.writeStream.outputMode(output_mode)
-                .format("memory")
-                .queryName(query_name)
-                .option("checkpointLocation", os.path.join(checkpoint, "cp"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if pin_state_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", before)
-    # the drain is complete and the memory sink holds the rows — the
-    # checkpoint has no further reader; failed drains skip this and are
-    # swept at exit instead, leaving the dir for post-mortem until then
-    _TMP_DIRS.discard(checkpoint)
-    shutil.rmtree(checkpoint, ignore_errors=True)
+    """``run_available_now`` into a memory-sink table; returns it."""
+    run_available_now(df, spark, source, query_name, output_mode)
     return spark.table(query_name)

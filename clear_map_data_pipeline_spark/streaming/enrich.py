@@ -57,9 +57,6 @@ def enriched_daily_totals_stream(
             "sum_value",
         )
     )
-    from .drain import backlog_state_width, drain_to_memory
+    from .drain import drain_to_memory
 
-    return drain_to_memory(
-        agg, spark, query_name, ckpt_prefix="clearmap_enrich_ckpt_",
-        pin_state_partitions=backlog_state_width(spark, events_dir),
-    )
+    return drain_to_memory(agg, spark, query_name, events_dir)

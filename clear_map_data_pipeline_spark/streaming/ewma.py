@@ -118,16 +118,11 @@ def daily_ewma_stream(
     query_name: str = "daily_ewma",
     watermark: str = "30 minutes",
     max_files_per_trigger: int | None = None,
-    store_provider: str | None = None,
 ) -> DataFrame:
     """Drain the events backlog with AvailableNow through the stateful
     daily-EWMA fold; returns the materialized table
     (user_id, day epoch-day, day_total, ewma)."""
-    from .drain import (
-        backlog_state_width,
-        drain_to_memory,
-        stage_stream_source,
-    )
+    from .drain import drain_to_memory, stage_stream_source
 
     stream = (
         normalize_ts(
@@ -158,11 +153,4 @@ def daily_ewma_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    return drain_to_memory(
-        folded,
-        spark,
-        query_name,
-        ckpt_prefix="clearmap_ewma_ckpt_",
-        pin_state_partitions=backlog_state_width(spark, events_dir),
-        store_provider=store_provider,
-    )
+    return drain_to_memory(folded, spark, query_name, events_dir)

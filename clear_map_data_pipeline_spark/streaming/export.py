@@ -10,13 +10,13 @@ idempotent MERGE pattern for plain parquet (no lakehouse format
 needed); at scale the same ``foreachBatch`` body swaps to a Delta/
 Iceberg MERGE INTO.
 
-``Trigger.AvailableNow`` + checkpoint = the daily-cron replacement:
-each run drains exactly the new files and exits.
+Each call drains the whole backlog with ``Trigger.AvailableNow`` into a
+fresh checkpoint and exits (``drain.run_available_now``).  Restarting
+on an existing checkpoint, so that a daily run drains only the new
+files, is not covered yet: ROADMAP item 4(a).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,7 +31,6 @@ def export_daily_partitions(
     watermark: str = "1 day",
     query_name: str = "daily_export",
     max_files_per_trigger: int | None = None,
-    store_provider: str | None = None,
 ) -> str:
     """Drain the events backlog and materialize per-day totals as a
     date-partitioned parquet dataset, overwriting only touched
@@ -68,17 +67,9 @@ def export_daily_partitions(
             .parquet(out_dir)
         )
 
-    from .drain import _tracked_mkdtemp, state_store_provider
+    from .drain import run_available_now
 
-    checkpoint = _tracked_mkdtemp("clearmap_export_ckpt_")
-    with state_store_provider(spark, store_provider):
-        q = (
-            agg.writeStream.foreachBatch(write_batch)
-            .outputMode("update")
-            .queryName(query_name)
-            .option("checkpointLocation", os.path.join(checkpoint, "cp"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_available_now(
+        agg, spark, events_dir, query_name, "update", foreach_batch=write_batch
+    )
     return out_dir

@@ -63,16 +63,11 @@ def heavy_hitters_stream(
     capacity: int = 50,
     query_name: str = "stream_heavy",
     max_files_per_trigger: int | None = None,
-    store_provider: str | None = None,
 ) -> DataFrame:
     """Drain the events backlog through per-group streaming MG state;
     returns the materialized snapshot table — one row per (group,
     microbatch), the max-mass row per group being the final summary."""
-    from .drain import (
-        backlog_state_width,
-        drain_to_memory,
-        stage_stream_source,
-    )
+    from .drain import drain_to_memory, stage_stream_source
 
     stream = stage_stream_source(
         spark, events_dir, max_files_per_trigger
@@ -88,11 +83,5 @@ def heavy_hitters_stream(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     return drain_to_memory(
-        snaps,
-        spark,
-        query_name,
-        output_mode="update",
-        ckpt_prefix="clearmap_heavy_ckpt_",
-        pin_state_partitions=backlog_state_width(spark, events_dir),
-        store_provider=store_provider,
+        snaps, spark, query_name, events_dir, output_mode="update"
     )

@@ -75,9 +75,6 @@ def interval_join_stream(
             "seconds_between"
         ),
     )
-    from .drain import backlog_state_width, drain_to_memory
+    from .drain import drain_to_memory
 
-    return drain_to_memory(
-        joined, spark, query_name, ckpt_prefix="clearmap_ssjoin_ckpt_",
-        pin_state_partitions=backlog_state_width(spark, events_dir),
-    )
+    return drain_to_memory(joined, spark, query_name, events_dir)

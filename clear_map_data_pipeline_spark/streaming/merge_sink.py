@@ -22,12 +22,11 @@ from __future__ import annotations
 
 import os
 import re
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.merge import merge_upsert
-from ..session import literal_frame, normalize_parquet_confs
+from ..session import literal_frame
 
 
 def latest_version(table_root: str) -> int | None:
@@ -55,12 +54,11 @@ def streaming_merge_sink(
     """Drain the CDC backlog (parquet rows: table columns + ``version``
     + ``op`` in {'I','U','D'}) into a keyed table at ``table_root``;
     returns the final merged table."""
-    normalize_parquet_confs(spark)
+    from .drain import run_available_now, stage_stream_source
+
     os.makedirs(table_root, exist_ok=True)
-    # changes_dir is always a directory in this sink's contract; the
-    # shared stage_stream_source would also work but its reader is
-    # rebuilt below to thread max_files_per_trigger into foreachBatch
-    batch_schema = spark.read.parquet(changes_dir).schema
+    changes = stage_stream_source(spark, changes_dir, max_files_per_trigger)
+    batch_schema = changes.schema
     table_cols = [
         f.name for f in batch_schema if f.name not in (version_col, op_col)
     ]
@@ -88,19 +86,9 @@ def streaming_merge_sink(
             f"{table_root}/v{epoch_id + 1}"
         )
 
-    reader = spark.readStream.schema(batch_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    checkpoint = tempfile.mkdtemp(prefix="clearmap_merge_ckpt_")
-    q = (
-        reader.parquet(changes_dir)
-        .writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .option("checkpointLocation", os.path.join(checkpoint, "cp"))
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        changes, spark, changes_dir, query_name, foreach_batch=apply_batch
     )
-    q.awaitTermination()
     final = latest_version(table_root)
     if final is None:
         return literal_frame(spark, [], batch_schema)

@@ -102,7 +102,6 @@ def user_sessions_stream(
     query_name: str = "user_sessions",
     watermark: str = "30 minutes",
     max_files_per_trigger: int | None = None,
-    store_provider: str | None = None,
 ) -> DataFrame:
     """Drain the events backlog with AvailableNow through the stateful
     sessionizer; returns the materialized closed-session table
@@ -128,13 +127,6 @@ def user_sessions_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    from .drain import backlog_state_width, drain_to_memory
+    from .drain import drain_to_memory
 
-    return drain_to_memory(
-        sessions,
-        spark,
-        query_name,
-        ckpt_prefix="clearmap_sessions_ckpt_",
-        pin_state_partitions=backlog_state_width(spark, events_dir),
-        store_provider=store_provider,
-    )
+    return drain_to_memory(sessions, spark, query_name, events_dir)

@@ -657,6 +657,7 @@ def test_streaming_multibatch_rocksdb_sweep(spark, sf_dir, tmp_path):
     )
     from clear_map_data_pipeline_spark.streaming.drain import (
         ROCKSDB_PROVIDER,
+        state_store_provider,
     )
     from clear_map_data_pipeline_spark.streaming.export import (
         export_daily_partitions,
@@ -670,29 +671,41 @@ def test_streaming_multibatch_rocksdb_sweep(spark, sf_dir, tmp_path):
         spark, sf_dir, str(tmp_path / "split2"), n=4, copies=2
     )
     single = f"{sf_dir}/events.parquet"
-    rocks = {"max_files_per_trigger": 1, "store_provider": ROCKSDB_PROVIDER}
+    out_a = str(tmp_path / "exp_a")
+    out_b = str(tmp_path / "exp_b")
 
     def rows(df):
         return sorted(map(tuple, df.collect()))
 
+    # the provider is read when a query starts, so every drain started
+    # inside the block runs on RocksDB and the twins outside it do not
+    with state_store_provider(spark, ROCKSDB_PROVIDER):
+        daily = daily_totals_stream(
+            spark, split, query_name="swp_daily", max_files_per_trigger=1
+        )
+        dedup = deduped_ingest_stream(
+            spark, split2, query_name="swp_dedup", max_files_per_trigger=1
+        )
+        export_daily_partitions(
+            spark, split, out_a, query_name="swp_exp", max_files_per_trigger=1
+        )
+        sess = user_sessions_stream(
+            spark, split, query_name="swp_sess", max_files_per_trigger=1
+        )
+
     # 1. windowed agg (stateful watermark windows)
-    assert rows(
-        daily_totals_stream(spark, split, query_name="swp_daily", **rocks)
-    ) == rows(daily_totals_stream(spark, single, query_name="swp_daily_1"))
+    assert rows(daily) == rows(
+        daily_totals_stream(spark, single, query_name="swp_daily_1")
+    )
 
     # 2. exactly-once dedup: doubled multi-file backlog vs single copy
-    assert rows(
-        deduped_ingest_stream(spark, split2, query_name="swp_dedup", **rocks)
-    ) == rows(
+    assert rows(dedup) == rows(
         deduped_ingest_stream(
             spark, stage_backlog(single, copies=1), query_name="swp_dedup_1"
         )
     )
 
     # 3. foreachBatch partitioned export (update mode, dynamic overwrite)
-    out_a = str(tmp_path / "exp_a")
-    out_b = str(tmp_path / "exp_b")
-    export_daily_partitions(spark, split, out_a, query_name="swp_exp", **rocks)
     export_daily_partitions(spark, single, out_b, query_name="swp_exp_1")
     a = rows(spark.read.parquet(out_a).select(
         F.col("date").cast("string"), "event_type", "n_events", "sum_value"
@@ -703,9 +716,9 @@ def test_streaming_multibatch_rocksdb_sweep(spark, sf_dir, tmp_path):
     assert a == b and a
 
     # 4. applyInPandasWithState sessionizer (GroupState + timeouts)
-    assert rows(
-        user_sessions_stream(spark, split, query_name="swp_sess", **rocks)
-    ) == rows(user_sessions_stream(spark, single, query_name="swp_sess_1"))
+    assert rows(sess) == rows(
+        user_sessions_stream(spark, single, query_name="swp_sess_1")
+    )
 
 
 def _mg_final_snapshots(rows):
@@ -789,6 +802,7 @@ def test_streaming_heavy_hitters_multibatch_rocksdb(spark, sf_dir, tmp_path):
     above."""
     from clear_map_data_pipeline_spark.streaming.drain import (
         ROCKSDB_PROVIDER,
+        state_store_provider,
     )
     from clear_map_data_pipeline_spark.streaming.heavy import (
         heavy_hitters_stream,
@@ -803,13 +817,13 @@ def test_streaming_heavy_hitters_multibatch_rocksdb(spark, sf_dir, tmp_path):
             query_name="t_heavy_one",
         ).collect()
     )
-    multi = _mg_final_snapshots(
-        heavy_hitters_stream(
-            spark, backlog, capacity=40,
-            query_name="t_heavy_multi", max_files_per_trigger=1,
-            store_provider=ROCKSDB_PROVIDER,
-        ).collect()
-    )
+    with state_store_provider(spark, ROCKSDB_PROVIDER):
+        multi = _mg_final_snapshots(
+            heavy_hitters_stream(
+                spark, backlog, capacity=40,
+                query_name="t_heavy_multi", max_files_per_trigger=1,
+            ).collect()
+        )
     assert set(one) == set(multi)
     for g in one:
         assert one[g]["mass"] == multi[g]["mass"]
